@@ -1,16 +1,39 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 
 /** Dev tool (guide §1 / §7.2), sibling of [[DumpPlans]]: EXECUTE every
   * registered query at a small SF and record the AQE-final plan — the
   * runtime truth the initial-plan dumps cannot show (exchange reuse,
-  * AQE join rewrites). Emits one line per query with the materialised
-  * shuffle-exchange count, ReusedExchange count and Generate (explode)
-  * count of the final plan, plus the full final-plan text per query.
-  * Not part of the driver contract.
+  * AQE join rewrites). Emits one line per query with the
+  * [[FinalPlanCounts]] of the final plan, plus the full final-plan text
+  * per query. Not part of the Verify/Bench contract.
   */
 object DumpRuntimePlans {
+
+  /** Operator lines of an AQE-final plan: materialised shuffle exchanges,
+    * ReusedExchange nodes, Generate (explode) nodes, parquet scans, and
+    * operators evaluating `shinglehashes(` (each one a corpus hashing
+    * pass). */
+  final case class FinalPlanCounts(real: Int, reused: Int, generates: Int,
+                                   scans: Int, shingleHashes: Int)
+
+  /** Executes `df`, then counts operators in its AQE-final plan — the
+    * adaptive plan string leads with the final plan; it is cut at the
+    * `== Initial Plan ==` section. */
+  def finalPlanCounts(df: DataFrame): FinalPlanCounts = {
+    df.queryExecution.toRdd.count()
+    val fin = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==")(0)
+    def lines(p: String => Boolean): Int = fin.linesIterator.count(p)
+    FinalPlanCounts(
+      real = lines(l => l.contains("+- Exchange ") && !l.contains("ReusedExchange")),
+      reused = lines(_.contains("ReusedExchange")),
+      generates = lines(_.contains("Generate ")),
+      scans = lines(_.contains("FileScan parquet")),
+      shingleHashes = lines(_.contains("shinglehashes(")))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 1) args(1) else "plans/r16/runtime"
@@ -31,17 +54,13 @@ object DumpRuntimePlans {
       .foreach { case (name, fn) =>
         try {
           val df = fn(spark, sfDir)
-          df.queryExecution.toRdd.count()
-          val s = df.queryExecution.executedPlan.toString
-          val fin = s.split("== Initial Plan ==")(0)
-          val real = fin.linesIterator.count(l =>
-            l.contains("+- Exchange ") && !l.contains("ReusedExchange"))
-          val reused = fin.linesIterator.count(_.contains("ReusedExchange"))
-          val gen = fin.linesIterator.count(_.contains("Generate "))
-          val scans = fin.linesIterator.count(_.contains("FileScan parquet"))
-          Files.writeString(Paths.get(s"$outDir/$name.txt"), s)
-          rows.append(s"$name\treal=$real\treused=$reused\tgen=$gen\tscan=$scans\n")
-          System.err.println(s"[rtplans] $name real=$real reused=$reused gen=$gen scan=$scans")
+          val c = finalPlanCounts(df)
+          Files.writeString(Paths.get(s"$outDir/$name.txt"),
+            df.queryExecution.executedPlan.toString)
+          val line = s"real=${c.real}\treused=${c.reused}\tgen=${c.generates}\t" +
+            s"scan=${c.scans}\thash=${c.shingleHashes}"
+          rows.append(s"$name\t$line\n")
+          System.err.println(s"[rtplans] $name ${line.replace('\t', ' ')}")
         } catch { case e: Throwable =>
           rows.append(s"$name\tERROR\t${e.getMessage}\n")
           System.err.println(s"[rtplans] $name failed: ${e.getMessage}")

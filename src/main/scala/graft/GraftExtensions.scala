@@ -13,7 +13,9 @@ import graft.expressions.{DotProduct, MinHashSig, ShingleHashes, SimHash64}
   * injects `graft_dot`, `graft_minhash_sig`, `graft_simhash64` and
   * `graft_shingle_hashes` into every session's function registry, so
   * plain-SQL / JDBC / thrift users run the same whole-stage-codegen
-  * expressions the DataFrame API uses — not UDF shims. (The scalar model
+  * expressions the DataFrame API uses — not UDF shims. It also injects
+  * the [[Barrier]] planning strategy (which [[Barrier.of]] otherwise
+  * installs on first use). (The scalar model
   * library needs no injection: it compiles to built-in functions; the
   * solver-backed models register as session UDFs via
   * [[graft.api.SqlFunctions.register]].)
@@ -41,6 +43,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       case Seq(tokens, n) =>
         ShingleHashes(tokens, intLit("graft_shingle_hashes", "shingleSize", n))
     })
+    ext.injectPlannerStrategy(_ => Barrier.Planning)
   }
 }
 

@@ -47,92 +47,3 @@ object Probe {
     spark.stop()
   }
 }
-
-/** Round-9 scratch A/B: fO2 formulation study (memo-UDF vs conf-keyed
-  * distinct+broadcast join-back) — results in
-  * `bench_ab/r9_fo2_dedup_study.md`. One JVM per mode so neither
-  * formulation inherits the other's warm memo caches. */
-object Fo2AbProbe {
-  def main(args: Array[String]): Unit = {
-    val mode = args.headOption.getOrElse("off") // "off" | "on"
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val stats = graft.functions.IwFull.attachMetrics(spark) ++
-      graft.functions.QfmFull.attachMetrics(spark)
-    if (mode == "on")
-      spark.conf.set(graft.functions.Fo2Dedup.DedupKey, "true")
-    // SPARK_GRAFT_FO2AB_GRID=1: snap (T, P) to a 5 K x 500 bar lattice —
-    // the grid-like experimental regime the dedup flag exists for.
-    val grid = sys.env.get("SPARK_GRAFT_FO2AB_GRID").exists(_.nonEmpty)
-    def melts = {
-      val m = Tables.meltsDF(spark, sfDir)
-      if (!grid) m
-      else m.withColumn("T_K",
-          org.apache.spark.sql.functions.round(
-            org.apache.spark.sql.functions.col("T_K") / 5.0) * 5.0)
-        .withColumn("P_bar",
-          org.apache.spark.sql.functions.round(
-            org.apache.spark.sql.functions.col("P_bar") / 500.0) * 500.0)
-    }
-    val n = melts.select("T_K", "P_bar").distinct().count()
-    val rows = melts.count()
-    println(s"[fo2ab] $sfDir grid=$grid: $rows rows, $n distinct (T,P)")
-    import org.apache.spark.sql.functions.{col, round => sround, log10}
-    for (fam <- Seq("qfm", "iw"); i <- 1 to 3) {
-      val df0 =
-        if (fam == "qfm") graft.functions.QfmFull.withQfm(melts, "T_K", "P_bar")
-        else graft.functions.IwFull.withIw(melts, "T_K", "P_bar")
-      val df = df0.select(col("sample_id"),
-          sround(log10(col("fO2")), 6).as("log10_fO2"))
-        .orderBy("sample_id")
-      val t0 = System.nanoTime()
-      df.queryExecution.toRdd.count()
-      println(f"[fo2ab] $mode $fam run$i: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    }
-    println("[fo2ab] " + stats.map(_.render).mkString("; "))
-    spark.stop()
-  }
-}
-
-/** A/B: window-form funnel vs the chained-join reference at a given sf
-  * (`bench_ab` protocol — one JVM, 3 timed runs per form). */
-object FunnelAbProbe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val steps = Seq("view", "click", "purchase")
-    def events = Tables.eventsWithMs(spark, sfDir)
-    for (form <- Seq("window", "chained"); i <- 1 to 3) {
-      val df =
-        if (form == "window")
-          graft.ext.EventAnalytics.funnel(events, steps, 3600000L)
-        else
-          graft.ext.EventAnalytics.funnelChained(events, steps, 3600000L)
-      val t0 = System.nanoTime()
-      df.queryExecution.toRdd.count()
-      println(f"[funnelab] $form run$i: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    }
-    spark.stop()
-  }
-}
-
-/** Bare-session smoke of the driver's entry contract. */
-object EntrySmoke {
-  def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    println(s"ENTRY_ROWS=${graft.SparkEntry.entry(spark).count()}")
-    spark.stop()
-  }
-}

@@ -44,36 +44,9 @@ object SetSimJoin {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
     // The doc's distinct-token count rides the explode as a per-row
-    // column (size() of the distinct array — the same value the old
-    // unordered count-window computed, long-cast to keep the output
-    // types identical), so the ranked chain needs ONE window pass
-    // (row_number) instead of two, and the token-set table derives from
-    // that same chain (guide §2.4: the groupBy rides the window's _id
-    // partitioning) instead of re-running scan+explode+its own _id
-    // exchange as an independent corpus subtree.
-    //
-    // ONE materialised token table (guide §8 / the SpanDedup precedent):
-    // the token-df aggregate branches off BELOW any exchange, so without
-    // an anchor the scan + tokenize + shingle hashing (the operator's
-    // dominant per-row cost) ran once per consumer — the r16 runtime
-    // audit showed 2 Generates / 2 scans in the final plan. The explicit
-    // doc-keyed exchange carries (_id, _n, _tok) longs only, is the
-    // runtime reuse anchor for the df branch, AND already satisfies the
-    // rank window's required partitioning, so net exchange count is
-    // unchanged while the heavy hashing runs once.
-    val spark = docs.sparkSession
-    val nPart = math.max(spark.sparkContext.defaultParallelism,
-      spark.sessionState.conf.numShufflePartitions)
-    // the isNotNull guard is a value no-op under the doc-id PK contract;
-    // it mirrors the isnotnull(doc_id) the downstream a_id/b_id equi-joins
-    // infer onto the ranked chain's scan, so the df branch's subtree stays
-    // canonically equal below the anchor instead of re-scanning
-    val toks = docs
-      .where(col(idCol).isNotNull)
-      .select(col(idCol).as("_id"), array_distinct(toksCol).as("_ts"))
-      .select(col("_id"), size(col("_ts")).cast("long").as("_n"),
-        explode(col("_ts")).as("_tok"))
-      .repartition(nPart, col("_id"))
+    // column (size() of the distinct array, long-cast), so the ranked
+    // chain needs ONE window pass (row_number).
+    val toks = tokenTable(docs, idCol, toksCol)
     val df = toks.groupBy("_tok").agg(count(lit(1)).as("_df"))
     val perDoc = Window.partitionBy("_id")
     val ranked = toks.join(df, "_tok")
@@ -87,20 +60,7 @@ object SetSimJoin {
         least(col("_na"), col("_nb")) >=
           lit(threshold) * greatest(col("_na"), col("_nb")))
       .select("a_id", "b_id").distinct()
-    // tokens are distinct per doc by construction, so collect_list +
-    // sort_array equals the old sort_array(collect_set(...)) exactly.
-    // The _rk >= 1 filter is a no-op on values (row_number starts at 1,
-    // and the optimizer cannot fold it) whose only job is to reference
-    // the window column: it pins the set table's column set to exactly
-    // the prefix subtree's (_id, _tok, _n, _df, _rk), so the two
-    // branches prune identically, stay canonically equal below the _id
-    // exchange, and runtime exchange reuse computes the shingle hashing
-    // + df join + rank window ONCE for prefix and set table alike —
-    // without it, column pruning specialised the set subtree and
-    // re-ran the whole chain per consumer.
-    val sets = ranked.where(col("_rk") >= 1).groupBy(col("_id"))
-      .agg(sort_array(collect_list(col("_tok"))).as("_set"),
-        max(col("_n")).as("_n"))
+    val sets = tokenSets(toks)
     cands
       .join(sets.select(col("_id").as("a_id"), col("_set").as("_sa"),
         col("_n").as("_na")), "a_id")
@@ -138,53 +98,26 @@ object SetSimJoin {
                       threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
-    // Same single-window restructure as [[jaccardJoin]]: _n rides the
-    // explode, the set table derives from the ranked chain — and the same
-    // doc-keyed anchor exchange so the token-df branch reuses ONE
-    // scan + shingle-hashing pass instead of re-running it.
-    val spark = docs.sparkSession
-    val nPart = math.max(spark.sparkContext.defaultParallelism,
-      spark.sessionState.conf.numShufflePartitions)
-    // same no-op id null-guard as jaccardJoin: aligns the df branch's
-    // scan filters with the join-inferred ones on the ranked chain
-    val toks = docs
-      .where(col(idCol).isNotNull)
-      .select(col(idCol).as("_id"), array_distinct(toksCol).as("_ts"))
-      .select(col("_id"), size(col("_ts")).cast("long").as("_n"),
-        explode(col("_ts")).as("_tok"))
-      .repartition(nPart, col("_id"))
+    // Same single-window chain as [[jaccardJoin]]. B's side needs no
+    // ranks: it reads the token table directly.
+    val toks = tokenTable(docs, idCol, toksCol)
     val df = toks.groupBy("_tok").agg(count(lit(1)).as("_df"))
     val perDoc = Window.partitionBy("_id")
-    val ranked = toks.join(df, "_tok")
+    val aPrefix = toks.join(df, "_tok")
       .withColumn("_rk", row_number().over(perDoc.orderBy(col("_df"), col("_tok"))))
-    val aPrefix = ranked
       .where(col("_rk") <= col("_n") - ceil(lit(threshold) * col("_n")) + 1)
       .select(col("_tok"), col("_id").as("a_id"), col("_n").as("_na"))
-    // _rk >= 1 is the same pruning pin as the set table below: B's side
-    // doesn't need ranks, but referencing _rk keeps this subtree
-    // canonically equal to the A-prefix chain so the corpus explode +
-    // df join + window run once (reused) instead of per side
-    val bAll = ranked.where(col("_rk") >= 1)
-      .select(col("_tok"), col("_id").as("b_id"), col("_n").as("_nb"))
+    val bAll = toks.select(col("_tok"), col("_id").as("b_id"), col("_n").as("_nb"))
     val cands = aPrefix.join(bAll, Seq("_tok"))
       .where(col("a_id") =!= col("b_id") &&
         col("_nb") >= ceil(lit(threshold) * col("_na")))
-      .select("a_id", "b_id").distinct()
-    // same no-op _rk filter as jaccardJoin: keeps the subtree
-    // reuse-identical to the ranked prefix chain
-    val sets = ranked.where(col("_rk") >= 1).groupBy(col("_id"))
-      .agg(sort_array(collect_list(col("_tok"))).as("_set"),
-        max(col("_n")).as("_n"))
+      .select("a_id", "_na", "b_id").distinct() // _na is a function of a_id
+    // both sides read the same (_id, _set) columns, so one set table
+    // broadcast serves both joins
+    val sets = tokenSets(toks)
     cands
-      .join(sets.select(col("_id").as("a_id"), col("_set").as("_sa"),
-        col("_n").as("_na")), "a_id")
-      // _n >= 1 is another value no-op pruning pin: the b side only
-      // consumes _set, and without a reference to _n column pruning
-      // specialises the b-side aggregate (dropping max(_n)), so it stops
-      // being canonically equal to the a side and rebuilds the whole set
-      // chain instead of reusing the a side's broadcast
-      .join(sets.where(col("_n") >= 1)
-        .select(col("_id").as("b_id"), col("_set").as("_sb")), "b_id")
+      .join(sets.select(col("_id").as("a_id"), col("_set").as("_sa")), "a_id")
+      .join(sets.select(col("_id").as("b_id"), col("_set").as("_sb")), "b_id")
       .withColumn("_inter",
         size(array_intersect(col("_sa"), col("_sb"))).cast("double"))
       .withColumn("containment", col("_inter") / col("_na"))
@@ -194,6 +127,39 @@ object SetSimJoin {
         col("_na").cast("long").as("a_size"),
         col("containment"))
   }
+
+  /** One `(_id, _n, _tok)` row per distinct token per doc, hash-partitioned
+    * on `_id`: the ONE materialised token table every branch of a join
+    * reads (guide §8). The doc-keyed exchange carries longs only, already
+    * satisfies the rank window's and the set aggregate's partitioning, and
+    * is the barriered reuse anchor, so the scan + tokenize + shingle
+    * hashing (the operator's dominant per-row cost) runs once however
+    * each branch prunes. The barrier under the explode keeps the
+    * explode's inferred `size(_ts) > 0` filter on the hashed column
+    * instead of re-hashing inside the scan filter. Null ids never pair
+    * (equi-join semantics) and are dropped before the corpus pass, so
+    * they do not weigh on token document frequencies. */
+  private def tokenTable(docs: DataFrame, idCol: String,
+                         toksCol: Column): DataFrame = {
+    val spark = docs.sparkSession
+    val nPart = math.max(spark.sparkContext.defaultParallelism,
+      spark.sessionState.conf.numShufflePartitions)
+    val hashed = graft.Barrier.of(docs
+      .where(col(idCol).isNotNull)
+      .select(col(idCol).as("_id"), array_distinct(toksCol).as("_ts")))
+    graft.Barrier.of(hashed
+      .select(col("_id"), size(col("_ts")).cast("long").as("_n"),
+        explode(col("_ts")).as("_tok"))
+      .repartition(nPart, col("_id")))
+  }
+
+  /** Per-doc sorted token set and its size. Tokens are distinct per doc,
+    * so sort_array(collect_list) is the exact sorted set; the aggregate
+    * rides the token table's `_id` partitioning. */
+  private def tokenSets(toks: DataFrame): DataFrame =
+    toks.groupBy(col("_id"))
+      .agg(sort_array(collect_list(col("_tok"))).as("_set"),
+        max(col("_n")).as("_n"))
 
   /** DuckDB oracle for [[containmentJoin]]: inverted-index directed join
     * (independent realisation). */

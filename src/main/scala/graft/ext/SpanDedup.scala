@@ -64,24 +64,18 @@ object SpanDedup {
     // ONE materialized gram table (guide §8: move the light proxy, don't
     // recompute the heavy hash): the explicit doc-keyed exchange carries
     // (doc_id, p, hash) longs only, doubles as the island window's
-    // required partitioning, and is the runtime reuse anchor for the
-    // duplicate-hash branch — without it the md5 gram hashing (this
-    // operator's dominant per-row cost) ran once per consumer. The
-    // isNotNull guard is a value no-op under the doc-id PK contract; it
-    // mirrors the null-filter the final LEFT join already infers on the
-    // coverage side, so both branches' subtrees stay canonically equal
-    // below the exchange.
-    val grams = docs
+    // required partitioning, and is the barriered reuse anchor for the
+    // duplicate-hash branch, so the md5 gram hashing (this operator's
+    // dominant per-row cost) runs once. Null-id documents contribute no
+    // grams: they never match the coverage join, and their grams must
+    // not mark another document's span as duplicated.
+    val grams = graft.Barrier.of(docs
       .where(col(idCol).isNotNull)
       .select(col(idCol), posexplode(gramHashArr(textCol, k)).as(Seq("p", "h")))
-      .repartition(nPart, col(idCol))
+      .repartition(nPart, col(idCol)))
     // grams occurring > 1 time corpus-wide (partial agg, then longs-only
-    // join back on the hash). count(CASE WHEN p >= 0 THEN doc_id END) is
-    // count(*) in disguise (posexplode positions are >= 0, ids non-null):
-    // the references keep column pruning from specialising this branch
-    // below the shared exchange, which would break the reuse.
-    val dupH = grams.groupBy("h")
-      .agg(count(when(col("p") >= 0, col(idCol))).as("c"))
+    // join back on the hash)
+    val dupH = grams.groupBy("h").agg(count(lit(1)).as("c"))
       .filter(col("c") > 1).select("h")
     val dup = grams.join(dupH, "h")
       .select(col(idCol), col("p").cast("long").as("p"),

@@ -12,7 +12,8 @@ object GraftSqlBridge {
   /** DataFrame over a logical plan (`classic.Dataset.ofRows` is likewise
     * `private[sql]` in Spark 4). Used by the fO2 auto-probe to run its
     * bounded probe on a repartition-stripped plan — a LocalLimit above an
-    * Exchange would otherwise execute the full map side. */
+    * Exchange would otherwise execute the full map side — and by
+    * `graft.Barrier.of`. */
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : DataFrame =

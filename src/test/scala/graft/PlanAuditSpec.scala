@@ -167,16 +167,15 @@ class PlanAuditSpec extends SparkSpec {
     "q_tfidf_topterms"     -> 7, // tf agg + df agg + join + top-k window + orderBy
     "q_dedup_minhash_pairs" -> 4, // band explode agg + bucket self-join + verify + orderBy
     // q_asof_join is pinned EXACTLY (2, zero joins) in its own test below
-    "q_setsim_join" -> 21, // the ranked subplan (scan floor + doc-keyed
-                           // anchor + df agg + rank window) appears once
-                           // per consumer in the INITIAL plan — r16 also
-                           // derives the set table from it and adds the
-                           // explicit anchor exchange (13 -> 17 -> 21) —
-                           // but every copy is pruning-pinned canonically
-                           // equal and collapses at runtime: the runtime
-                           // budget above pins 5 materialised / 6 reused,
-                           // ONE corpus shingle-hashing pass total (the
-                           // anchor made the df branch stop re-scanning)
+    "q_setsim_join" -> 15, // the barriered token table (scan floor +
+                           // doc-keyed anchor) appears once per consumer
+                           // in the INITIAL plan (df agg, both prefix
+                           // sides, the set table, which reads the anchor
+                           // directly: 21 -> 15), but every copy is
+                           // canonically equal and collapses at runtime:
+                           // the runtime budget below pins 4
+                           // materialised / 5 reused, ONE Generate and
+                           // ONE shingle-hashing operator total
     "q_range_join" -> 4,  // scan floor x2 + band agg + orderBy (interval
                           // side broadcasts; final agg rides the map side)
     "q_cms_counts" -> 4,  // scan floor + token agg + topk + orderBy; the
@@ -214,7 +213,7 @@ class PlanAuditSpec extends SparkSpec {
     "q_bm25_topk" -> 11,      // the query-term-pruned tf subplan (scan
                               // floor + tf agg) appears once per consumer
                               // in the INITIAL plan (df-count, scoring);
-                              // runtime budget above: 9 materialised /
+                              // runtime budget below: 9 materialised /
                               // 1 reused. Query terms / df / stats all
                               // BROADCAST — no corpus-scale join shuffle
     "q_char_entropy" -> 1,    // scan floor + orderBy; the entropy itself is
@@ -265,16 +264,16 @@ class PlanAuditSpec extends SparkSpec {
                               // c1-from-c2 + v-from-c1 chains (r16: 10 ->
                               // 12 in the INITIAL plan because c1/v now
                               // carry c2's subtree, but at runtime they
-                              // ride its exchange — runtime budget above:
+                              // ride its exchange — runtime budget below:
                               // 7 materialised / 2 reused, TWO corpus
                               // explodes instead of four) + per-doc agg +
                               // orderBy; model joins BROADCAST
-    "q_containment_join" -> 21, // the ranked subplan appears once per
-                              // consumer (prefix side, probe side, set
-                              // agg x2) in the INITIAL plan, like
-                              // q_setsim_join (r16: 13 -> 17 -> 21 for
-                              // the same reasons); the runtime budget
-                              // above pins 5 materialised / 7 reused
+    "q_containment_join" -> 12, // the token table appears once per
+                              // consumer (df agg, prefix side, unranked
+                              // probe side, the set table) in the INITIAL
+                              // plan, like q_setsim_join (21 -> 12); the
+                              // runtime budget below pins 4 materialised
+                              // / 4 reused, one Generate, one hashing
     "q_temperature_sample" -> 7, // scan floor + group-count agg pair + the
                               // per-group rate derivation + orderBy; the
                               // (group, rate) dim BROADCASTS onto the
@@ -400,88 +399,104 @@ class PlanAuditSpec extends SparkSpec {
       s"serving plan has ${aggs.size} aggregates, expected only the nid argmax")
   }
 
-  /** r16: the repeated-subplan families' INITIAL plans still carry each
+  /** The repeated-subplan families' INITIAL plans still carry each
     * corpus subtree once per consumer (Spark plans trees — any DataFrame
-    * fork duplicates), but every duplicate is now CANONICALLY EQUAL to
-    * its sibling (pruning pins added in r16), so runtime exchange reuse
-    * collapses them. This law pins the runtime truth the initial-plan
-    * budgets above cannot see: after executing the query, the AQE-final
-    * plan must carry at most `realMax` materialised shuffle exchanges
-    * and at least `reusedMin` ReusedExchange nodes (the proof the
+    * fork duplicates), but every duplicate sits behind a [[Barrier]] reuse
+    * anchor and stays CANONICALLY EQUAL to its sibling, so runtime
+    * exchange reuse collapses them. This law pins the runtime truth the
+    * initial-plan budgets above cannot see: after executing the query,
+    * the AQE-final plan must carry at most `realMax` materialised shuffle
+    * exchanges, at least `reusedMin` ReusedExchange nodes (the proof the
     * duplicated corpus subtrees were NOT re-executed — a reuse miss at
-    * 100 TB re-runs a corpus-scale aggregate). */
-  private val runtimeExchangeBudgets: Map[String, (Int, Int)] = Map(
-    // name -> (realMax, reusedMin), measured at sf0.001 local[4]
-    "q_setsim_join" -> ((5, 6)),        // RR floor + doc-keyed anchor +
-                                        // df(_tok) + rank window spared
-                                        // (anchor partitioning) + orderBy;
-                                        // df branch, prefix-b and the set
-                                        // table all ride the ONE anchor —
-                                        // one shingle-hashing pass total
-    "q_containment_join" -> ((5, 7)),   // same shape, B side unranked but
-                                        // pin-aligned to the ranked chain
-    "q_tfidf_topterms" -> ((5, 1)),     // (doc, term) tf agg pair + df
+    * 100 TB re-runs a corpus-scale aggregate) and at most `genMax`
+    * Generate nodes (each one a corpus explode pass). */
+  private val runtimeExchangeBudgets: Map[String, (Int, Int, Int)] = Map(
+    // name -> (realMax, reusedMin, genMax), measured at sf0.001 local[4]
+    "q_setsim_join" -> ((4, 5, 1)),     // RR floor + doc-keyed anchor +
+                                        // df(_tok) + orderBy; the rank
+                                        // window and the set table ride
+                                        // the anchor's partitioning, the
+                                        // set table broadcasts once for
+                                        // both sides; df branch, prefix-b
+                                        // and the set table all ride the
+                                        // ONE anchor — one shingle-hashing
+                                        // pass total (budget below)
+    "q_containment_join" -> ((4, 4, 1)), // same shape; B side reads the
+                                        // anchor unranked, one set table
+                                        // broadcast serves both sides
+    "q_tfidf_topterms" -> ((5, 1, 1)),  // (doc, term) tf agg pair + df
                                         // agg + top-k window + orderBy;
                                         // the df branch rides tf's
-                                        // exchange (tf >= 1 pruning pin —
-                                        // one tokenize explode total)
-    "q_bm25_topk" -> ((9, 1)),          // pruned-tf agg + df + stats pair
+                                        // exchange (barriered tf — one
+                                        // tokenize explode total)
+    "q_bm25_topk" -> ((9, 1, 1)),       // pruned-tf agg + df + stats pair
                                         // + score agg + 2-phase rank pair
                                         // + orderBy; df-count rides tf's
                                         // exchange (the reuse)
-    "q_hybrid_rrf" -> ((14, 1)),        // bm25 leg (9) + fusion agg +
+    "q_hybrid_rrf" -> ((14, 1, 2)),     // bm25 leg (9) + fusion agg +
                                         // 2-phase fused rank + orderBy;
                                         // dense leg is exchange-free
                                         // (broadcast n^2 kernel)
-    "q_source_distinctive" -> ((8, 2)), // cst agg pair + t-window + cs
-                                        // agg pair + nv single-partition
-                                        // + 2-phase rank + orderBy; cs/nv
-                                        // both ride the t-window exchange
-    "q_bigram_logprob" -> ((7, 2)),     // bg floor x2 + c2 agg pair +
+    "q_source_distinctive" -> ((8, 2, 1)), // cst agg pair + t-window +
+                                        // cs agg pair + nv single-
+                                        // partition + 2-phase rank +
+                                        // orderBy; cs/nv both ride the
+                                        // t-window exchange
+    "q_bigram_logprob" -> ((7, 2, 2)),  // bg floor x2 + c2 agg pair +
                                         // c1(w1) + per-doc agg + orderBy;
                                         // c1 rides c2's exchange, v rides
-                                        // c1's
-    "q_pagerank" -> ((4, 0)),           // checkpointed src-partitioned
+                                        // c1's; the scored bigram stream
+                                        // and c2 explode separately
+    "q_pagerank" -> ((4, 0, 0)),        // checkpointed src-partitioned
                                         // edges: 3 contribution aggs +
                                         // orderBy, zero join exchanges
-    "q_retention_cohorts" -> ((3, 0)),  // ONE user window exchange + the
-                                        // distinct-count pair + orderBy
-    "q_dup_span_coverage" -> ((5, 1)),  // floor + doc-keyed gram
+    "q_retention_cohorts" -> ((3, 0, 0)), // ONE user window exchange +
+                                        // the distinct-count pair +
+                                        // orderBy
+    "q_dup_span_coverage" -> ((5, 1, 1)), // floor + doc-keyed gram
                                         // materialisation (the md5-hash
                                         // reuse anchor) + dup-gram agg +
                                         // lens floor + orderBy
-    "q_pmi_collocations" -> ((5, 3)),   // token + bigram explodes once
+    "q_pmi_collocations" -> ((5, 3, 2)), // token + bigram explodes once
                                         // each; totals/unigram branches
                                         // ride the agg exchanges
-    "q_dist_match" -> ((5, 0)),         // bucket-count agg pair + the
+    "q_dist_match" -> ((5, 0, 0)),      // bucket-count agg pair + the
                                         // single-partition totals/max
                                         // window chain + floor + orderBy
-    "q_temperature_sample" -> ((5, 0))) // group-count agg pair + the
+    "q_temperature_sample" -> ((5, 0, 0))) // group-count agg pair + the
                                         // single-partition n_max window +
                                         // floor + orderBy
+
+  /** Operators evaluating `shinglehashes(` in the AQE-final plan: ONE
+    * corpus hashing pass — the explode's inferred `size(_ts) > 0` filter
+    * stays above the hashing barrier instead of re-hashing in the scan. */
+  private val shingleHashBudgets: Map[String, Int] = Map(
+    "q_setsim_join" -> 1,
+    "q_containment_join" -> 1)
 
   test("runtime (AQE-final) exchange budgets: duplicated corpus subplans " +
       "collapse via exchange reuse") {
     val over = runtimeExchangeBudgets.toSeq.sortBy(_._1).flatMap {
-      case (name, (realMax, reusedMin)) =>
-        val df = Queries.queries(name)(spark, sfDir)
-        df.queryExecution.toRdd.count()
-        // post-execution, the adaptive plan string leads with the final
-        // plan; cut at the Initial Plan section
-        val fin = df.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==")(0)
-        val real = fin.linesIterator.count(l =>
-          l.contains("+- Exchange ") && !l.contains("ReusedExchange"))
-        val reused = fin.linesIterator.count(_.contains("ReusedExchange"))
-        info(s"$name: real=$real (max $realMax), reused=$reused " +
-          s"(min $reusedMin)")
-        (if (real > realMax)
-          Some(s"$name: $real materialised exchanges > budget $realMax")
+      case (name, (realMax, reusedMin, genMax)) =>
+        val c = DumpRuntimePlans.finalPlanCounts(
+          Queries.queries(name)(spark, sfDir))
+        val hashMax = shingleHashBudgets.get(name)
+        info(s"$name: real=${c.real} (max $realMax), reused=${c.reused} " +
+          s"(min $reusedMin), gen=${c.generates} (max $genMax), " +
+          s"hash=${c.shingleHashes}" + hashMax.fold("")(m => s" (max $m)"))
+        (if (c.real > realMax)
+          Some(s"$name: ${c.real} materialised exchanges > budget $realMax")
         else None) ++
-          (if (reused < reusedMin)
-            Some(s"$name: only $reused ReusedExchange nodes, expected >= " +
+          (if (c.reused < reusedMin)
+            Some(s"$name: only ${c.reused} ReusedExchange nodes, expected >= " +
               s"$reusedMin — a corpus subtree is being re-executed")
-          else None)
+          else None) ++
+          (if (c.generates > genMax)
+            Some(s"$name: ${c.generates} Generate nodes > budget $genMax — " +
+              "a corpus explode runs once per consumer")
+          else None) ++
+          hashMax.filter(c.shingleHashes > _).map(m =>
+            s"$name: ${c.shingleHashes} shingle-hashing operators > budget $m")
     }
     assert(over.isEmpty, over.mkString("\n"))
   }
